@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from memory_engine_spark.operators import graph
 from memory_engine_spark.operators.merging import (
-    updated_rating, updated_truthfulness, upsert,
+    updated_rating, updated_truthfulness,
 )
 from memory_engine_spark.operators.ranking import (
     combined_score, greedy_diversity_filter, quality_rating_score, relevance_score,
@@ -205,15 +205,19 @@ class MemoryEngine:
     # -- mutation (mcp_endpoint update_rating; rating_system.py:61-91) --------
     def update_rating(self, node_id: str, confirmation: float = 0.0,
                       contradiction: float = 0.0, richness_factor: float = 0.0):
-        nodes = self.s.table("nodes")
-        updates = (nodes.filter(F.col("node_id") == node_id).select(
-            "*",
-        ).withColumn("rating_truthfulness",
-                     updated_truthfulness(F.col("rating_truthfulness"),
-                                          F.lit(confirmation), F.lit(contradiction)))
-         .withColumn("rating_richness",
-                     updated_rating(F.col("rating_richness"), F.lit(richness_factor))))
-        merged = upsert(nodes, updates, "node_id")
+        # one projection over the unchanged rows: each write adds one
+        # operator to the nodes plan, and reads it once. An anti-join +
+        # union would read the previous plan three times, so the plan
+        # (and every later read's analysis) grows threefold per write.
+        hit = F.col("node_id") == node_id
+        merged = self.s.table("nodes").withColumns({
+            "rating_truthfulness": F.when(hit, updated_truthfulness(
+                F.col("rating_truthfulness"), F.lit(confirmation),
+                F.lit(contradiction))).otherwise(F.col("rating_truthfulness")),
+            "rating_richness": F.when(hit, updated_rating(
+                F.col("rating_richness"), F.lit(richness_factor)))
+            .otherwise(F.col("rating_richness")),
+        })
         self.s.register("nodes", merged)
         self.s.invalidate_cache()
         return merged

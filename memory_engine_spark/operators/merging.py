@@ -8,8 +8,10 @@ Reference:
   truthfulness: clamp01(old + 0.2·confirmation − 0.2·contradiction);
   richness/stability: clamp01(old + 0.2·factor).
 
-Both are pure column expressions — upserts apply them via anti-join +
-union (immutable storage MERGE idiom, SURVEY.md §7 hard part (c)).
+Both are pure column expressions — ``MemoryEngine.update_rating`` applies
+them as one projection over the table; batch upserts replace rows via
+anti-join + union (immutable storage MERGE idiom, SURVEY.md §7 hard
+part (c)).
 """
 
 from __future__ import annotations

@@ -2244,6 +2244,11 @@ def decode_avi_frames(payload: bytes) -> tuple[np.ndarray, int]:
             f"only uncompressed 24-bit DIB streams supported "
             f"(bpp={bpp}, compression={compression})")
     stride = (w * 3 + 3) & ~3
+    # bound the header-sized raster by the bytes actually present
+    # BEFORE allocating (as the MP4 path does): one flipped avih
+    # width/height byte would otherwise ask for tens of GiB
+    if len(frames) * h * stride > len(b):
+        raise ValueError("frame bytes exceed payload")
     out = np.empty((len(frames), h, w, 3), dtype=np.uint8)
     for fi, (o, sz) in enumerate(frames):
         # exact, not >=: an uncompressed DIB frame is h*stride bytes

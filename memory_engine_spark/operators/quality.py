@@ -569,15 +569,12 @@ def enhancement_plan(nodes: DataFrame, edges: DataFrame,
     """
     # item_id is STRING throughout: node ids and source identifiers
     # share the column, as in the reference (:636)
-    # r17 (guide §1.2/§5): scored feeds TWO branches of the final
-    # single-action plan (the improve_content filter and the
-    # source_reliability join), and content_dimension is the plan's
-    # most expensive leaf (~1.3 s warm per pass at sf0.1) — without a
-    # materialization the action computed it twice. cache()+count()
-    # follows the _materialize_release convention its pair inputs
-    # already use (eager, one compute, CacheManager-dedupable,
-    # LRU-evictable; the narrow (id, score) projection is |nodes|-row
-    # small). One extra ~0.3 s driver action buys back a full pass.
+    # scored feeds TWO branches of the final plan (the improve_content
+    # filter and the source_reliability join), and content_dimension is
+    # the plan's most expensive leaf — cached, it is computed once. The
+    # top-n result is collected and returned as a local frame, so
+    # scored is released before return (the _materialize_release
+    # convention) and no cache entry outlives the call.
     scored = (content_dimension(nodes, text_col, id_col)
               .select(id_col, "content_score").cache())
     scored.count()
@@ -630,7 +627,7 @@ def enhancement_plan(nodes: DataFrame, edges: DataFrame,
                      F.col("action").asc(), F.col("item_id").asc())
             .limit(top_n))
     from pyspark.sql import Window as W
-    return plan.select(
+    ranked = plan.select(
         F.row_number().over(
             W.orderBy(F.col("priority").asc(),
                       F.col("expected_improvement").desc(),
@@ -638,6 +635,11 @@ def enhancement_plan(nodes: DataFrame, edges: DataFrame,
         .alias("rank"),
         "item_id", "action", "priority", "expected_improvement",
         "confidence", "effort")
+    try:
+        rows = ranked.collect()
+    finally:
+        scored.unpersist(False)
+    return nodes.sparkSession.createDataFrame(rows, ranked.schema)
 
 
 def calibration_report(df: DataFrame, conf_u_col: str,

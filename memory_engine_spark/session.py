@@ -17,15 +17,16 @@ from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Tuned for the local[32]/128GiB test harness; on a real cluster these
-# are overridden by spark-submit conf. AQE handles runtime re-planning
-# (partition coalescing, skew-join splitting) at any scale.
+# Engine defaults; on a real cluster spark-submit conf overrides them.
+# spark.sql.shuffle.partitions is not listed: get_spark sets it to the
+# session's own core count (sparkContext.defaultParallelism), so a
+# shuffle runs one task per core on any host. AQE handles runtime
+# re-planning (partition coalescing, skew-join splitting) at any scale.
 DEFAULT_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     # test parquet is written with ns timestamps; read as long and convert
     # (sources/tables.py) — Spark has no native TIMESTAMP(NANOS) type.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.sql.shuffle.partitions": "32",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -40,12 +41,16 @@ DEFAULT_CONFS = {
 
 
 def get_spark(app_name: str = "memory-engine-spark", master: str | None = None) -> SparkSession:
-    """Build (or reuse) a SparkSession with engine defaults applied."""
+    """Build (or reuse) a SparkSession with engine defaults applied and
+    one shuffle partition per core."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.appName(app_name).master(master or f"local[{cpus}]")
     for k, v in DEFAULT_CONFS.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(spark.sparkContext.defaultParallelism))
+    return spark
 
 
 class EngineSession:

@@ -14,8 +14,7 @@ from memory_engine_spark.plans.query_spec import QuerySpec
 from memory_engine_spark.session import EngineSession
 
 
-@pytest.fixture(scope="module")
-def engine(spark):
+def _engine(spark) -> MemoryEngine:
     s = EngineSession(spark)
     nodes = spark.createDataFrame(
         [("n1", "spark joins data fast", "web", 1000.0, 0.9, 0.8, 0.5, "a,b"),
@@ -32,6 +31,11 @@ def engine(spark):
     s.register("nodes", nodes)
     s.register("edges", edges)
     return MemoryEngine(s)
+
+
+@pytest.fixture(scope="module")
+def engine(spark):
+    return _engine(spark)
 
 
 def test_query_lifecycle_and_pagination(engine):
@@ -91,6 +95,80 @@ def test_update_rating_formula(engine):
     row = engine.s.table("nodes").filter("node_id = 'n2'").collect()[0]
     assert abs(row["rating_truthfulness"] - 0.5) < 1e-9   # 0.3 + 0.2
     assert abs(row["rating_richness"] - 0.3) < 1e-9       # 0.2 + 0.1
+
+
+def test_update_rating_plan_stays_flat(spark):
+    """update_rating is one projection over the nodes plan: a write
+    adds at most two analyzed-plan lines, repeated writes compound
+    through the clamp, and an unknown node_id changes no row."""
+    eng = _engine(spark)
+
+    def table():
+        return {r["node_id"]: (r["rating_truthfulness"], r["rating_richness"])
+                for r in eng.s.table("nodes").collect()}
+
+    def plan_lines():
+        return len(eng.s.table("nodes")._jdf.queryExecution().analyzed()
+                   .treeString().splitlines())
+
+    def clamp(x):
+        return min(max(x, 0.0), 1.0)
+
+    model = table()
+    writes = [("n1", 1.0, 0.0, 0.5), ("n2", 1.0, 0.0, 0.0),
+              ("n1", 1.0, 0.0, 0.5), ("n4", 0.0, 2.0, -1.0),
+              ("n2", 0.0, 1.0, 0.0), ("zz", 1.0, 0.0, 1.0),
+              ("n4", 0.0, 1.0, -1.0), ("n2", 1.0, 0.0, 0.0)]
+    lines = plan_lines()
+    for node_id, conf, contra, rich in writes:
+        before = table()
+        reply = eng.execute_command({
+            "action": "update_rating", "node_id": node_id,
+            "confirmation": conf, "contradiction": contra,
+            "richness_factor": rich})
+        assert reply == {"status": "ok"}
+        now = plan_lines()
+        assert now - lines <= 2, (node_id, lines, now)
+        lines = now
+        if node_id not in model:
+            assert table() == before
+            continue
+        t, r = model[node_id]
+        model[node_id] = (clamp(t + 0.2 * conf - 0.2 * contra),
+                          clamp(r + 0.2 * rich))
+        got = eng.execute_command({"action": "get_node", "node_id": node_id})
+        assert got["status"] == "ok"
+        assert abs(got["node"]["rating_truthfulness"]
+                   - model[node_id][0]) < 1e-9
+    # compounded and clamped: n1 0.8 -> 1.0 (clamped) -> 1.0;
+    # n2 0.3 -> 0.5 -> 0.3 -> 0.5; n4 0.5 -> 0.1 -> 0.0 (clamped)
+    final = table()
+    assert final.keys() == model.keys()
+    for node_id, (t, r) in model.items():
+        assert abs(final[node_id][0] - t) < 1e-9
+        assert abs(final[node_id][1] - r) < 1e-9
+    assert final["n1"][0] == 1.0 and final["n4"][0] == 0.0
+    assert abs(final["n2"][0] - 0.5) < 1e-9
+
+
+def test_get_spark_shuffle_partitions_follow_cores(spark):
+    from memory_engine_spark import session
+
+    assert "spark.sql.shuffle.partitions" not in session.DEFAULT_CONFS
+    keys = ["spark.sql.shuffle.partitions"] + [
+        k for k in session.DEFAULT_CONFS if spark.conf.isModifiable(k)]
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        s = session.get_spark()
+        assert (s.conf.get("spark.sql.shuffle.partitions")
+                == str(s.sparkContext.defaultParallelism))
+    finally:
+        # get_spark reuses the shared test session: put its confs back
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_search_diversity_filter(spark):

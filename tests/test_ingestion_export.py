@@ -810,6 +810,13 @@ def test_avi_container_roundtrip_and_sampling(spark):
         i = avi.find(b"strf")
         bad[i + 8 + 16] = 1
         multimodal.decode_avi_frames(bytes(bad))
+    # a corrupt avih width/height is bounded by the payload before the
+    # frame raster is allocated
+    big = bytearray(avi)
+    i = avi.find(b"avih") + 8
+    big[i + 32:i + 40] = (1 << 24).to_bytes(4, "little") * 2
+    with _pytest.raises(ValueError, match="exceed payload"):
+        multimodal.decode_avi_frames(bytes(big))
     with _pytest.raises(ValueError):
         multimodal.decode_avi_frames(b"RIFF\x04\x00\x00\x00WAVE")
 

@@ -373,8 +373,16 @@ def test_enhancement_plan_orchestrates_and_ranks(spark):
     edges = spark.createDataFrame(
         [(1, 2), (4, 5)], "from_id long, to_id long")
     pairs = spark.createDataFrame([(4, 5)], "a long, b long")
-    plan = enhancement_plan(nodes, edges, pairs, "text", "doc_id",
-                            "source", top_n=20).collect()
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    out = enhancement_plan(nodes, edges, pairs, "text", "doc_id",
+                           "source", top_n=20)
+    # the cached content scores are released inside the call
+    assert not persisted() - before
+    plan = out.collect()
     by_action = {}
     for r in plan:
         by_action.setdefault(r["action"], []).append(r)
